@@ -63,6 +63,7 @@ from beehive_data_etl_spark.functions.dedup import (
     spread_if_narrow,
     token_shingles,
 )
+from beehive_data_etl_spark.sources import table_meta as tm
 
 _STORE_SCHEMA = (
     "id string, band int, band_hash string, op_sequence long, deleted boolean"
@@ -307,7 +308,6 @@ class SignatureStore:
         folded) — under a nonzero horizon the steady state is ONE live
         file plus aging superseded sets, so the compact threshold
         cannot re-trigger a full refold every batch."""
-        import json
         import time as _time
 
         self.gc_superseded(older_than_s)
@@ -317,10 +317,7 @@ class SignatureStore:
         out = os.path.join(self.root, f"compact-{uuid.uuid4().hex}.parquet")
         self._latest(files).write.mode("overwrite").parquet(out)
         marker = os.path.join(self.root, f"superseded-{uuid.uuid4().hex}.json")
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"ts": _time.time(), "files": files}, fh)
-        os.replace(tmp, marker)
+        tm.write_json(marker, {"ts": _time.time(), "files": files})
         self.gc_superseded(older_than_s)
 
     def maybe_compact(self) -> None:
@@ -503,21 +500,12 @@ class NearDupView:
         return os.path.join(self.root, "CURRENT")
 
     def current(self) -> dict | None:
-        import json
-
-        try:
-            with open(self._ptr_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        return tm.read_json(self._ptr_path())
 
     def _swap(self, version: int, pairs_dirs: list[str]) -> None:
-        import json
-
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"version": version, "pairs_dirs": pairs_dirs}, fh)
-        os.replace(tmp, self._ptr_path())
+        tm.write_json(
+            self._ptr_path(), {"version": version, "pairs_dirs": pairs_dirs}
+        )
 
     def _reap_crash_artifacts(self, committed: int) -> None:
         """Delete every store batch file / pairs dir whose version is

@@ -42,7 +42,6 @@ rather than hidden — ``verify()`` does an exact compare.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -50,6 +49,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sources import table_meta as tm
 
 COUNT_COL = "n_rows"
 _DIRTY = "_dirty"
@@ -254,11 +255,7 @@ class AggregateView:
         return os.path.join(self.root, "CURRENT")
 
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        return tm.read_json(self._ptr_path())
 
     def _ptr_extra(self) -> dict:
         """Extra fields a subclass pins into the CURRENT pointer (e.g.
@@ -270,10 +267,10 @@ class AggregateView:
         prev = self.current()
         out = os.path.join(self.root, f"agg-v{version:06d}-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(out)
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"version": version, "path": out, **self._ptr_extra()}, fh)
-        os.replace(tmp, self._ptr_path())  # THE commit point
+        tm.write_json(  # THE commit point
+            self._ptr_path(),
+            {"version": version, "path": out, **self._ptr_extra()},
+        )
         # reap the generation BEFORE prev (prev itself stays one more
         # refresh: a reader that loaded the old pointer may still be
         # scanning it)

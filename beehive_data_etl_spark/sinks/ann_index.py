@@ -42,7 +42,6 @@ tie-break) rather than silently vanishing.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -52,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..functions.similarity import cosine_expr
+from ..sources import table_meta as tm
 from .snapshot import KEY
 
 
@@ -85,14 +85,12 @@ class AnnIndex:
         """Reopen an EXISTING index reading vec_col and n_cells from
         its own pointer (restating n_cells wrong is refused anyway —
         this is the maintenance-job path that cannot drift)."""
-        try:
-            with open(os.path.join(root, "CURRENT")) as fh:
-                cur = json.load(fh)
-        except FileNotFoundError:
+        cur = tm.read_json(os.path.join(root, "CURRENT"))
+        if cur is None:
             raise ValueError(
                 f"no index at {root} (never refreshed) — construct "
                 "AnnIndex directly to create one"
-            ) from None
+            )
         for k in ("vec_col", "n_cells"):
             if k in kwargs:
                 raise ValueError(
@@ -109,10 +107,8 @@ class AnnIndex:
         return os.path.join(self.root, "CURRENT")
 
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                cur = json.load(fh)
-        except FileNotFoundError:
+        cur = tm.read_json(self._ptr_path())
+        if cur is None:
             return None
         if cur.get("n_cells") != self.n_cells:
             raise ValueError(
@@ -123,29 +119,23 @@ class AnnIndex:
         return cur
 
     def _swap(self, version: int, files: list[str]) -> None:
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "files": files,
-                    "n_cells": self.n_cells,
-                    "vec_col": self.vec_col,
-                },
-                fh,
-            )
-        os.replace(tmp, self._ptr_path())  # THE commit point
+        tm.write_json(  # THE commit point
+            self._ptr_path(),
+            {
+                "version": version,
+                "files": files,
+                "n_cells": self.n_cells,
+                "vec_col": self.vec_col,
+            },
+        )
 
     # ---------------------------------------------------------- centroids
     def _cent_path(self) -> str:
         return os.path.join(self.root, "centroids.json")
 
     def centroids(self) -> list[list[float]] | None:
-        try:
-            with open(self._cent_path()) as fh:
-                return json.load(fh)["vecs"]
-        except FileNotFoundError:
-            return None
+        cent = tm.read_json(self._cent_path())
+        return None if cent is None else cent["vecs"]
 
     def _seed_centroids(self, version: int) -> list[list[float]]:
         """Pin the codebook at first build: live vectors of the
@@ -169,10 +159,7 @@ class AnnIndex:
         dims = {len(v) for v in vecs}
         if len(dims) != 1:
             raise ValueError(f"mixed embedding dimensions {sorted(dims)}")
-        tmp = self._cent_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"vecs": vecs, "dim": dims.pop()}, fh)
-        os.replace(tmp, self._cent_path())
+        tm.write_json(self._cent_path(), {"vecs": vecs, "dim": dims.pop()})
         return vecs
 
     def _cent_df(self, vecs: list[list[float]]) -> DataFrame:

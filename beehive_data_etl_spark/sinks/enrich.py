@@ -53,15 +53,14 @@ a dim delete NULLs its columns on every holder at the refresh's clock.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.refetch import next_op_sequence
+from ..sources import table_meta as tm
 from .snapshot import _INTERNAL, KEY, SEQ, SnapshotSink
 
 
@@ -178,17 +177,10 @@ class EnrichView:
         return os.path.join(self.dest.root, "_enrich", "CURRENT")
 
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        return tm.read_json(self._ptr_path())
 
     def _write_ptr(self, fv: int, dv: int) -> None:
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"fact_version": fv, "dim_version": dv}, fh)
-        os.replace(tmp, self._ptr_path())
+        tm.write_json(self._ptr_path(), {"fact_version": fv, "dim_version": dv})
 
     # ------------------------------------------------------------- joins
     def _dim_live(self, dv: int) -> DataFrame:
@@ -278,11 +270,9 @@ class EnrichView:
                 # a replica, can always recompute exactly: map them to
                 # a full rebuild instead of failing. The rebuild's
                 # anti-join tombstones purged/rolled-back leavers.
-                from ..sources.table_meta import refuse_unstreamable_window
-
                 try:
-                    refuse_unstreamable_window(self.fact.root, fv0, fv_new)
-                    refuse_unstreamable_window(self.dim.root, dv0, dv_new)
+                    tm.refuse_unstreamable_window(self.fact.root, fv0, fv_new)
+                    tm.refuse_unstreamable_window(self.dim.root, dv0, dv_new)
                 except RuntimeError as e:
                     full_reason = f"unstreamable window: {e}"
         if full_reason is not None:

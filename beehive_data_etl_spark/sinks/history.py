@@ -67,7 +67,6 @@ deleted as soon as the swap lands — byte destruction is the point.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -79,6 +78,7 @@ from pyspark.sql.window import Window
 
 from beehive_data_etl_spark.operators.schema_evolution import align_to_schema
 from beehive_data_etl_spark.sinks.snapshot import CELL, KEY, SEQ
+from beehive_data_etl_spark.sources import table_meta as tm
 
 VFROM = "_v_from"
 CHANGE = "change_type"
@@ -128,19 +128,13 @@ class HistoryView:
         return os.path.join(self.root, "CURRENT")
 
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        return tm.read_json(self._ptr_path())
 
     def _swap(self, version: int, baseline: int, files: list[dict]) -> None:
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"version": version, "baseline": baseline, "files": files}, fh
-            )
-        os.replace(tmp, self._ptr_path())  # THE commit point
+        tm.write_json(  # THE commit point
+            self._ptr_path(),
+            {"version": version, "baseline": baseline, "files": files},
+        )
 
     def _reap_unreferenced(self) -> None:
         """Crash hygiene at refresh entry: delete store dirs no pointer

@@ -61,15 +61,14 @@ sandbox, same pattern as ``read_kafka_stream``).
 
 from __future__ import annotations
 
-import json
 import os
 import re
-import tempfile
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from beehive_data_etl_spark.sinks.snapshot import SnapshotSink
+from beehive_data_etl_spark.sources import table_meta as tm
 
 _INTERNAL = {"change_type", "deleted", "op", "op_sequence", "doc_id"}
 
@@ -173,16 +172,11 @@ class Outbox:
         return os.path.join(self.out_dir, f"_{self.name}.json")
 
     def _pointer(self) -> dict:
-        if not os.path.exists(self._pointer_path):
-            return {"cursor": 0, "next_offsets": {}}
-        with open(self._pointer_path) as f:
-            return json.load(f)
+        ptr = tm.read_json(self._pointer_path)
+        return {"cursor": 0, "next_offsets": {}} if ptr is None else ptr
 
     def _swap_pointer(self, ptr: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.out_dir, prefix=".outbox-")
-        with os.fdopen(fd, "w") as f:
-            json.dump(ptr, f)
-        os.replace(tmp, self._pointer_path)
+        tm.write_json(self._pointer_path, ptr)
 
     def cursor(self) -> int:
         return self._pointer()["cursor"]
@@ -322,18 +316,16 @@ class Outbox:
         """Same classes as Replicator._refuse_unreplicable_window —
         outbox consumers are replicas; see sinks/replicate.py for the
         per-case arguments."""
-        for v in range(frm + 1, to + 1):
-            m = self.src.snapshot(v).get("metrics", {})
-            for op in ("rollback_to", "backfill", "purge", "drop_column",
-                       "rename_column"):
-                if op in m:
-                    raise RuntimeError(
-                        f"upstream {op} at v{v} inside outbox window "
-                        f"({frm}, {to}]: no forward change event can "
-                        "express it (see sinks/replicate.py). Publish "
-                        f"up to v{v - 1} first, reconcile every "
-                        f"consumer out of band, then mark_synced({v})."
-                    )
+        hit = tm.first_unstreamable(self.src.snapshot, frm, to)
+        if hit is not None:
+            v, op = hit
+            raise RuntimeError(
+                f"upstream {op} at v{v} inside outbox window "
+                f"({frm}, {to}]: no forward change event can "
+                "express it (see sinks/replicate.py). Publish "
+                f"up to v{v - 1} first, reconcile every "
+                f"consumer out of band, then mark_synced({v})."
+            )
 
     def _advance_retention_tag(self, to: int) -> None:
         self.src.move_tag(f"outbox-{self.name}", to)

@@ -63,6 +63,7 @@ from beehive_data_etl_spark.sinks.snapshot import (
     SnapshotSink,
     _conjunct_expr,
 )
+from beehive_data_etl_spark.sources import table_meta as tm
 
 
 def predicate_expr(where: list[tuple] | None, prefix: str = "") -> "F.Column":
@@ -326,49 +327,49 @@ class Replicator:
         return out
 
     def _refuse_unreplicable_window(self, frm: int, to: int) -> None:
-        for v in range(frm + 1, to + 1):
-            m = self.src.snapshot(v).get("metrics", {})
-            if "rollback_to" in m:
-                raise RuntimeError(
-                    f"upstream rolled back at v{v} inside replication "
-                    f"window ({frm}, {to}]: forward change events cannot "
-                    "express it (no tombstone carries the removal's "
-                    "op_sequence). Roll the downstream back to a tag at "
-                    f"or below v{frm}, or re-bootstrap it, then "
-                    "mark_synced(to) to resume."
-                )
-            if "backfill" in m:
-                raise RuntimeError(
-                    f"upstream backfill at v{v} inside replication window "
-                    f"({frm}, {to}]: backfilled rows keep their "
-                    "op_sequence (the changelog is silent about them), so "
-                    "syncing would silently diverge the replica. Run the "
-                    "same backfill on the downstream table, then "
-                    "mark_synced(to) past it."
-                )
-            if "purge" in m:
-                raise RuntimeError(
-                    f"upstream purge at v{v} inside replication window "
-                    f"({frm}, {to}]: a purge removes rows WITHOUT a "
-                    "tombstone, so no forward delete event exists at a "
-                    "truthful op_sequence (forging one would shadow a "
-                    "legitimate later re-insert). Run the same purge_keys "
-                    "on the downstream table, then mark_synced(to) past it "
-                    "— takedown completeness requires purging every "
-                    "replica anyway."
-                )
-            for op in ("drop_column", "rename_column"):
-                if op in m:
-                    raise RuntimeError(
-                        f"upstream {op} at v{v} inside replication window "
-                        f"({frm}, {to}]: rewritten rows keep their "
-                        "op_sequence (silent in the changelog) and no "
-                        "forward event can drop or rename a replica's "
-                        f"column. Recover IN ORDER: sync({v - 1}) first "
-                        "(replicating the genuine changes before the "
-                        f"alter), run the same {op} on the downstream "
-                        f"table, then mark_synced({v}) past it and resume."
-                    )
+        hit = tm.first_unstreamable(self.src.snapshot, frm, to)
+        if hit is None:
+            return
+        v, op = hit
+        if op == "rollback_to":
+            raise RuntimeError(
+                f"upstream rolled back at v{v} inside replication "
+                f"window ({frm}, {to}]: forward change events cannot "
+                "express it (no tombstone carries the removal's "
+                "op_sequence). Roll the downstream back to a tag at "
+                f"or below v{frm}, or re-bootstrap it, then "
+                "mark_synced(to) to resume."
+            )
+        if op == "backfill":
+            raise RuntimeError(
+                f"upstream backfill at v{v} inside replication window "
+                f"({frm}, {to}]: backfilled rows keep their "
+                "op_sequence (the changelog is silent about them), so "
+                "syncing would silently diverge the replica. Run the "
+                "same backfill on the downstream table, then "
+                "mark_synced(to) past it."
+            )
+        if op == "purge":
+            raise RuntimeError(
+                f"upstream purge at v{v} inside replication window "
+                f"({frm}, {to}]: a purge removes rows WITHOUT a "
+                "tombstone, so no forward delete event exists at a "
+                "truthful op_sequence (forging one would shadow a "
+                "legitimate later re-insert). Run the same purge_keys "
+                "on the downstream table, then mark_synced(to) past it "
+                "— takedown completeness requires purging every "
+                "replica anyway."
+            )
+        raise RuntimeError(
+            f"upstream {op} at v{v} inside replication window "
+            f"({frm}, {to}]: rewritten rows keep their "
+            "op_sequence (silent in the changelog) and no "
+            "forward event can drop or rename a replica's "
+            f"column. Recover IN ORDER: sync({v - 1}) first "
+            "(replicating the genuine changes before the "
+            f"alter), run the same {op} on the downstream "
+            f"table, then mark_synced({v}) past it and resume."
+        )
 
     def _advance_retention_tag(self, to: int) -> None:
         # atomic move — no crash window where the pin is absent

@@ -53,7 +53,6 @@ may still be scanning it).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -63,6 +62,7 @@ from pyspark.sql import functions as F
 
 from .snapshot import _INTERNAL, KEY, _bucket_expr
 from ..functions.hashing import portable_hash32
+from ..sources import table_meta as tm
 
 SHARD = "shard"
 
@@ -93,18 +93,11 @@ class ShardExport:
         return os.path.join(self.root, "CURRENT")
 
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        return tm.read_json(self._ptr_path())
 
     def _swap(self, ptr: dict) -> None:
         prev = self.current()
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(ptr, fh)
-        os.replace(tmp, self._ptr_path())  # THE commit point
+        tm.write_json(self._ptr_path(), ptr)  # THE commit point
         # reap generations referenced by neither the new nor the
         # previous pointer (prev's survive one more refresh: a reader
         # that loaded it may still be scanning)

@@ -40,7 +40,6 @@ this file are bounded by ``n_buckets``, never by data volume.
 from __future__ import annotations
 
 import bisect
-import fcntl
 import glob
 import json
 import os
@@ -50,7 +49,6 @@ import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,6 +65,7 @@ from beehive_data_etl_spark.operators.schema_evolution import (
     align_to_schema,
     evolve_schema,
 )
+from beehive_data_etl_spark.sources import table_meta as tm
 
 KEY = "doc_id"
 SEQ = "op_sequence"
@@ -228,7 +227,8 @@ class SnapshotSink:
         # manifests land BEFORE the pointer swap): vacuum() must not
         # treat them as orphans while the batch is in flight
         self._inflight: set[str] = set()
-        for d in ("_snapshots", "_manifests", "_metrics", "data"):
+        os.makedirs(tm.snapshots_dir(root), exist_ok=True)
+        for d in ("_manifests", "_metrics", "data"):
             os.makedirs(os.path.join(root, d), exist_ok=True)
         snap = self.current_snapshot()
         if snap is not None and snap["n_buckets"] != n_buckets:
@@ -247,9 +247,7 @@ class SnapshotSink:
         runs in a JVM-less worker and only touches the file protocol).
         Other constructor knobs (audit, compact_threshold, …) pass
         through ``kwargs``."""
-        from ..sources.table_meta import current_snapshot as _head
-
-        head = _head(root)
+        head = tm.current_snapshot(root)
         if head is None:
             raise ValueError(
                 f"no table at {root} (no snapshot) — open() is for "
@@ -271,9 +269,6 @@ class SnapshotSink:
         )
 
     # ------------------------------------------------------------- snapshots
-    def _current_path(self) -> str:
-        return os.path.join(self.root, "_snapshots", "CURRENT")
-
     def _is_main(self) -> bool:
         return self.ref == "main"
 
@@ -283,23 +278,6 @@ class SnapshotSink:
                 f"{op} is a table-level operation; this handle writes "
                 f"branch {self.ref!r} — run it on the main ref"
             )
-
-    def _snap_name(self, version: int) -> str:
-        return (
-            f"v{version:06d}.json"
-            if self._is_main()
-            else f"b-{self.ref}-v{version:06d}.json"
-        )
-
-    def _branch_ptr_path(self, name: str) -> str:
-        return os.path.join(self.root, "_snapshots", f"BRANCH-{name}.json")
-
-    def _read_branch_ptr(self, name: str) -> dict | None:
-        try:
-            with open(self._branch_ptr_path(name)) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
 
     def _phys_batch_id(self, batch_id: str) -> str:
         """Physical namespace for a batch id: data dirs and manifests
@@ -311,71 +289,23 @@ class SnapshotSink:
             batch_id if self._is_main() else f"b.{self.ref}.{batch_id}"
         )
 
-    @contextmanager
-    def _table_lock(self):
-        """CROSS-PROCESS commit mutex (flock on a lockfile under the
-        table): ``_commit_lock`` serializes threads of one sink object,
-        but two objects/processes over the same root would otherwise
-        interleave head-read → pointer-swap and the last swap would
-        silently DROP the other commit's bucket entries (the batch
-        stays un-committed and is replayable, but nothing reports it).
-        flock blocks across file descriptors even within one process,
-        so it also covers the two-objects-one-process case. This is
-        the sandbox stand-in for Iceberg's optimistic catalog-CAS
-        commit; flock is advisory and not NFS-reliable — an object
-        store deployment uses the catalog, not this file."""
-        fd = os.open(
-            os.path.join(self.root, "_snapshots", "LOCK"),
-            os.O_CREAT | os.O_RDWR,
-        )
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
-
     def current_snapshot(self) -> dict | None:
-        try:
-            if self._is_main():
-                with open(self._current_path()) as fh:
-                    name = fh.read().strip()
-            else:
-                ptr = self._read_branch_ptr(self.ref)
-                if ptr is None:
-                    raise RuntimeError(
-                        f"no branch {self.ref!r} at {self.root} — "
-                        "create_branch() it on the main handle first"
-                    )
-                name = ptr["head"]
-            with open(os.path.join(self.root, "_snapshots", name)) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        snap = tm.current_snapshot(self.root, self.ref)
+        if (
+            snap is None
+            and not self._is_main()
+            and tm.read_branch_ptr(self.root, self.ref) is None
+        ):
+            raise RuntimeError(
+                f"no branch {self.ref!r} at {self.root} — "
+                "create_branch() it on the main handle first"
+            )
+        return snap
 
     def _write_snapshot(self, snap: dict) -> None:
-        name = self._snap_name(snap["version"])
-        path = os.path.join(self.root, "_snapshots", name)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(snap, fh)
-        os.replace(tmp, path)
+        name = tm.put_snapshot(self.root, snap, self.ref)
         self.crash_hook("before_pointer_swap")
-        if self._is_main():
-            ptr_tmp = self._current_path() + f".tmp-{uuid.uuid4().hex}"
-            with open(ptr_tmp, "w") as fh:
-                fh.write(name)
-            os.replace(ptr_tmp, self._current_path())  # THE commit point
-        else:
-            ptr = self._read_branch_ptr(self.ref)
-            if ptr is None:
-                raise RuntimeError(f"branch {self.ref!r} was deleted")
-            ptr["head"] = name
-            ptr_path = self._branch_ptr_path(self.ref)
-            ptr_tmp = ptr_path + f".tmp-{uuid.uuid4().hex}"
-            with open(ptr_tmp, "w") as fh:
-                json.dump(ptr, fh)
-            os.replace(ptr_tmp, ptr_path)  # THE commit point (branch)
+        tm.set_head(self.root, name, self.ref)  # THE commit point
 
     def _is_committed_in(self, snap: dict | None, phys_id: str) -> bool:
         """True when the batch is already reflected in ``snap`` — under
@@ -400,28 +330,24 @@ class SnapshotSink:
         )
 
     # ------------------------------------------------------------- refs
-    def _tags_path(self) -> str:
-        return os.path.join(self.root, "_snapshots", "TAGS.json")
-
     def tags(self) -> dict[str, int]:
         """Named refs (Iceberg tags): name → committed snapshot version.
         A tagged version's data files are RETAINED by ``vacuum()`` even
         once superseded — the retention mechanism that makes audit
         pins / reproducible-training snapshots ("the corpus as of the
         v3 run") survive routine maintenance."""
-        try:
-            with open(self._tags_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {}
+        return tm.load_tags(self.root)
 
     def tag(self, name: str, version: int | None = None) -> int:
         """Pin ``name`` to a committed snapshot (default: CURRENT).
         Re-tagging the same version is an idempotent no-op; moving an
         existing tag is refused (drop it first) — silent moves are how
-        audit pins get lost."""
+        audit pins get lost. All-digit names are refused: a numeric
+        string resolves as a version, so such a tag could never be
+        read back."""
         self._require_main("tag")
-        with self._commit_lock, self._table_lock():
+        self._check_tag_name(name)
+        with self._commit_lock, tm.table_lock(self.root):
             snap = self.current_snapshot()
             if snap is None:
                 raise ValueError("no snapshot yet — nothing to tag")
@@ -434,7 +360,7 @@ class SnapshotSink:
                     "drop_tag() it before re-pointing"
                 )
             tags[name] = v
-            self._write_tags(tags)
+            tm.write_tags(self.root, tags)
         return v
 
     def move_tag(self, name: str, version: int | None = None) -> int:
@@ -443,7 +369,8 @@ class SnapshotSink:
         cursor). One tags-file write, so no crash window where the pin
         is absent (a drop_tag + tag sequence would have one)."""
         self._require_main("move_tag")
-        with self._commit_lock, self._table_lock():
+        self._check_tag_name(name)
+        with self._commit_lock, tm.table_lock(self.root):
             snap = self.current_snapshot()
             if snap is None:
                 raise ValueError("no snapshot yet — nothing to tag")
@@ -451,46 +378,32 @@ class SnapshotSink:
             self.snapshot(v)  # must exist (raises otherwise)
             tags = self.tags()
             tags[name] = v
-            self._write_tags(tags)
+            tm.write_tags(self.root, tags)
         return v
 
     def drop_tag(self, name: str) -> int:
         self._require_main("drop_tag")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             tags = self.tags()
             if name not in tags:
                 raise KeyError(f"no tag {name!r}")
             v = tags.pop(name)
-            self._write_tags(tags)
+            tm.write_tags(self.root, tags)
         return v
 
-    def _write_tags(self, tags: dict[str, int]) -> None:
-        tmp = self._tags_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(tags, fh)
-        os.replace(tmp, self._tags_path())
+    @staticmethod
+    def _check_tag_name(name: str) -> None:
+        if tm.is_version_ref(name):
+            raise ValueError(
+                f"tag name {name!r} reads as a version number; "
+                "resolve_ref would never reach the tag"
+            )
 
     # ------------------------------------------------------------ branches
     def branches(self) -> dict[str, dict]:
         """Live branches: name → {"base": fork version, "head": head
         version}. Works from any handle (read-only)."""
-        out = {}
-        sdir = os.path.join(self.root, "_snapshots")
-        for f in os.listdir(sdir):
-            m = re.fullmatch(r"BRANCH-(.+)\.json", f)
-            if not m:
-                continue
-            try:
-                with open(os.path.join(sdir, f)) as fh:
-                    ptr = json.load(fh)
-            except FileNotFoundError:
-                continue  # deleted between listdir and read
-            hm = re.search(r"v(\d+)\.json$", ptr["head"])
-            out[m.group(1)] = {
-                "base": ptr["base"],
-                "head": int(hm.group(1)) if hm else ptr["base"],
-            }
-        return out
+        return tm.branches(self.root)
 
     def create_branch(self, name: str, at: int | str | None = None) -> dict:
         """Fork a BRANCH at a committed snapshot (default: head) —
@@ -511,11 +424,11 @@ class SnapshotSink:
         self._require_main("create_branch")
         if not re.fullmatch(r"[A-Za-z0-9_\-]{1,64}", name) or name == "main":
             raise ValueError(f"invalid branch name {name!r}")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet — nothing to branch from")
-            if self._read_branch_ptr(name) is not None:
+            if tm.read_branch_ptr(self.root, name) is not None:
                 raise ValueError(f"branch {name!r} already exists")
             base = head["version"] if at is None else self.resolve_ref(at)
             # the base snapshot must be readable (floor + file checks
@@ -524,13 +437,10 @@ class SnapshotSink:
             self.snapshot(base)
             # clear husks of a dead same-named incarnation (crashed
             # cleanup) — they would shadow main's files in snapshot()
-            self._drop_branch_chain(name)
-            ptr = {"head": f"v{base:06d}.json", "base": base}
-            ptr_path = self._branch_ptr_path(name)
-            tmp = ptr_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(ptr, fh)
-            os.replace(tmp, ptr_path)
+            tm.drop_branch_chain(self.root, name)
+            tm.write_branch_ptr(
+                self.root, name, {"head": tm.snap_name(base), "base": base}
+            )
         return {"branch": name, "base": base}
 
     def branch(self, name: str) -> "SnapshotSink":
@@ -542,7 +452,7 @@ class SnapshotSink:
         rebucket, snapshot/tombstone GC, purge, column DDL, tags,
         audit contract) are refused — run those on main."""
         self._require_main("branch")
-        if self._read_branch_ptr(name) is None:
+        if tm.read_branch_ptr(self.root, name) is None:
             raise ValueError(
                 f"no branch {name!r} (known: {sorted(self.branches())})"
             )
@@ -561,30 +471,16 @@ class SnapshotSink:
             ref=name,
         )
 
-    def _drop_branch_chain(self, name: str) -> int:
-        """Remove a branch's own snapshot JSONs (not the pointer).
-        Shared by delete_branch, both fast_forward exits, AND
-        create_branch — a crashed cleanup can leave b-<name>-v*.json
-        husks, and a re-created branch's snapshot() would prefer those
-        over main's same-numbered files (stale-history shadowing)."""
-        sdir = os.path.join(self.root, "_snapshots")
-        dropped = 0
-        for f in os.listdir(sdir):
-            if re.fullmatch(rf"b-{re.escape(name)}-v\d+\.json", f):
-                os.remove(os.path.join(sdir, f))
-                dropped += 1
-        return dropped
-
     def delete_branch(self, name: str) -> dict:
         """Drop a branch: the pointer and the branch's own snapshot
         JSONs go now; its data files become unreferenced and the next
         age-gated ``vacuum`` reclaims them."""
         self._require_main("delete_branch")
-        with self._commit_lock, self._table_lock():
-            if self._read_branch_ptr(name) is None:
+        with self._commit_lock, tm.table_lock(self.root):
+            if tm.read_branch_ptr(self.root, name) is None:
                 raise ValueError(f"no branch {name!r}")
-            os.remove(self._branch_ptr_path(name))
-            dropped = self._drop_branch_chain(name)
+            tm.drop_branch_ptr(self.root, name)
+            dropped = tm.drop_branch_chain(self.root, name)
         return {"branch": name, "snapshots_dropped": dropped}
 
     def fast_forward(self, name: str) -> dict:
@@ -605,22 +501,28 @@ class SnapshotSink:
         Crash-safe: snapshot copies land before the pointer swap; a
         crash leaves inert above-head JSONs that a re-run overwrites."""
         self._require_main("fast_forward")
-        with self._commit_lock, self._table_lock():
-            ptr = self._read_branch_ptr(name)
-            if ptr is None:
+        with self._commit_lock, tm.table_lock(self.root):
+            br = tm.branches(self.root).get(name)
+            if br is None:
                 raise ValueError(f"no branch {name!r}")
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet")
-            base = ptr["base"]
-            hm = re.search(r"v(\d+)\.json$", ptr["head"])
-            b_head = int(hm.group(1))
+            base, b_head = br["base"], br["head"]
             if b_head == base:
-                os.remove(self._branch_ptr_path(name))
+                tm.drop_branch_ptr(self.root, name)
                 return {"branch": name, "fast_forwarded": 0,
                         "version": head["version"]}
             prefix = f"b.{name}."
-            sdir = os.path.join(self.root, "_snapshots")
+
+            def _unprefixed(v: int) -> dict:
+                s = tm.read_snapshot(self.root, v, name)
+                s["committed_batches"] = [
+                    b[len(prefix):] if b.startswith(prefix) else b
+                    for b in s["committed_batches"]
+                ]
+                return s
+
             if head["version"] != base:
                 # already published? (a prior fast_forward crashed
                 # between the pointer swap and the branch cleanup).
@@ -628,21 +530,8 @@ class SnapshotSink:
                 # main's same-numbered snapshot — not a batch-id
                 # heuristic, which misses batch-less (compact-only)
                 # branches and could false-positive on replays
-                with open(os.path.join(
-                    sdir, f"b-{name}-v{b_head:06d}.json"
-                )) as fh:
-                    b_snap = json.load(fh)
-                b_snap["committed_batches"] = [
-                    b[len(prefix):] if b.startswith(prefix) else b
-                    for b in b_snap["committed_batches"]
-                ]
-                try:
-                    with open(
-                        os.path.join(sdir, f"v{b_head:06d}.json")
-                    ) as fh:
-                        m_snap = json.load(fh)
-                except FileNotFoundError:
-                    m_snap = None
+                b_snap = _unprefixed(b_head)
+                m_snap = tm.read_snapshot(self.root, b_head)
                 if (
                     head["version"] >= b_head
                     and m_snap is not None
@@ -651,8 +540,8 @@ class SnapshotSink:
                     == b_snap["committed_batches"]
                 ):
                     # finish the crashed cleanup
-                    os.remove(self._branch_ptr_path(name))
-                    self._drop_branch_chain(name)
+                    tm.drop_branch_ptr(self.root, name)
+                    tm.drop_branch_chain(self.root, name)
                     return {"branch": name, "fast_forwarded": 0,
                             "already_published": True,
                             "version": head["version"]}
@@ -662,32 +551,15 @@ class SnapshotSink:
                     "re-apply the branch's batches to main (exactly-once "
                     "dedupes any overlap) or delete_branch()"
                 )
-            last = None
             for v in range(base + 1, b_head + 1):
-                with open(
-                    os.path.join(sdir, f"b-{name}-v{v:06d}.json")
-                ) as fh:
-                    s = json.load(fh)
-                s["committed_batches"] = [
-                    b[len(prefix):] if b.startswith(prefix) else b
-                    for b in s["committed_batches"]
-                ]
-                dst = os.path.join(sdir, f"v{v:06d}.json")
-                tmp = dst + f".tmp-{uuid.uuid4().hex}"
-                with open(tmp, "w") as fh:
-                    json.dump(s, fh)
-                os.replace(tmp, dst)
-                last = f"v{v:06d}.json"
+                last = tm.put_snapshot(self.root, _unprefixed(v))
             self.crash_hook("before_pointer_swap")
-            ptr_tmp = self._current_path() + f".tmp-{uuid.uuid4().hex}"
-            with open(ptr_tmp, "w") as fh:
-                fh.write(last)
-            os.replace(ptr_tmp, self._current_path())  # THE publish point
+            tm.set_head(self.root, last)  # THE publish point
             # consume the branch (best-effort; inert leftovers if we
             # crash here — a re-run's already-published check and
             # create_branch's husk sweep both finish the cleanup)
-            os.remove(self._branch_ptr_path(name))
-            self._drop_branch_chain(name)
+            tm.drop_branch_ptr(self.root, name)
+            tm.drop_branch_chain(self.root, name)
         return {
             "branch": name,
             "fast_forwarded": b_head - base,
@@ -695,31 +567,18 @@ class SnapshotSink:
         }
 
     def resolve_ref(self, ref: int | str) -> int:
-        """A version number passes through; a string resolves via the
-        tag table. Every time-travel entry point (``read_state``,
-        ``lookup``, ``read_changes*``) accepts either."""
-        if isinstance(ref, str):
-            tags = self.tags()
-            if ref not in tags:
-                raise KeyError(f"no tag {ref!r} (known: {sorted(tags)})")
-            return tags[ref]
-        return int(ref)
+        """A version number — an int or a numeric string — passes
+        through; any other string resolves via the tag table. Every
+        time-travel entry point (``read_state``, ``lookup``,
+        ``read_changes*``) accepts either."""
+        return tm.resolve_ref(self.root, ref)
 
     def commit_time(self, v: int) -> float:
         """A committed version's wall-clock time: the recorded
         ``metrics.commit_ts``, falling back to the snapshot JSON's
         mtime for writer paths that predate the field. Shared by
-        ``as_of_version`` and the metadata tables (sinks/meta.py) so
-        the snapshot-file naming and fallback live in one place."""
-        snap = self.snapshot(v)
-        ct = snap.get("metrics", {}).get("commit_ts")
-        if ct is not None:
-            return float(ct)
-        for name in (self._snap_name(v), f"v{v:06d}.json"):
-            p = os.path.join(self.root, "_snapshots", name)
-            if os.path.exists(p):
-                return os.path.getmtime(p)
-        raise FileNotFoundError(f"no snapshot file for v{v}")
+        ``as_of_version`` and the metadata tables (sinks/meta.py)."""
+        return tm.commit_time(self.root, self.resolve_ref(v), self.ref)
 
     def as_of_version(self, ts: float | str) -> int:
         """Timestamp time travel (Iceberg's ``as-of-timestamp``): the
@@ -821,7 +680,7 @@ class SnapshotSink:
                 f"dir(s) already vacuumed (first: {missing[0]}); tag "
                 "versions you may need to restore"
             )
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             # quiesce check INSIDE the commit critical section — a
             # separate check-then-lock had a window where apply_batch
             # could register in-flight between the two acquisitions
@@ -904,19 +763,8 @@ class SnapshotSink:
     def _branch_heads(self) -> list[dict]:
         """Head snapshots of every live branch — data they reference
         must survive main-side GC exactly like tagged versions."""
-        heads = []
-        for name in self.branches():
-            ptr = self._read_branch_ptr(name)
-            if ptr is None:
-                continue  # deleted concurrently
-            try:
-                with open(
-                    os.path.join(self.root, "_snapshots", ptr["head"])
-                ) as fh:
-                    heads.append(json.load(fh))
-            except FileNotFoundError:
-                continue
-        return heads
+        heads = [tm.current_snapshot(self.root, n) for n in self.branches()]
+        return [h for h in heads if h is not None]  # None: deleted since
 
     def _referenced_paths(self, snap: dict | None) -> set[str]:
         """Every data path referenced by the head snapshot, any tagged
@@ -963,8 +811,7 @@ class SnapshotSink:
         # re-application idempotent.
         reusable = set()
         for b in found:
-            with open(self._manifest_path(batch_id, b)) as fh:
-                m = json.load(fh)
+            m = tm.read_json(self._manifest_path(batch_id, b))
             rel = m.get(
                 "path",
                 os.path.join("data", f"ingest={batch_id}", f"bucket={b}"),
@@ -1001,10 +848,7 @@ class SnapshotSink:
     def _write_manifest(self, batch_id: str, bucket: int, body: dict) -> None:
         path = self._manifest_path(batch_id, bucket)
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(body, fh)
-        os.replace(tmp, path)
+        tm.write_json(path, body)
 
     # ------------------------------------------------------------- reads
     def _read_buckets(
@@ -1069,35 +913,7 @@ class SnapshotSink:
         removed files; ``expire_snapshots`` additionally retires the
         JSON metadata below a recorded floor (tagged versions kept) —
         reads below it fail here with the floor named."""
-        version = self.resolve_ref(version)
-        try:
-            if not self._is_main():
-                # branch chain first; versions <= the fork point fall
-                # through to the main chain's files (shared history)
-                try:
-                    with open(
-                        os.path.join(
-                            self.root, "_snapshots", self._snap_name(version)
-                        )
-                    ) as fh:
-                        return json.load(fh)
-                except FileNotFoundError:
-                    pass
-            with open(
-                os.path.join(self.root, "_snapshots", f"v{version:06d}.json")
-            ) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            head = self.current_snapshot()
-            floor = 1 if head is None else head.get("snapshot_floor", 1)
-            if version < floor:
-                raise ValueError(
-                    f"snapshot v{version} was expired (snapshot_floor="
-                    f"{floor}); time travel / changelog windows below "
-                    "the floor are gone — tag versions you need to keep "
-                    "before expire_snapshots()"
-                ) from None
-            raise
+        return tm.load_snapshot(self.root, self.resolve_ref(version), self.ref)
 
     def _projection_target(
         self, snap: dict, columns: list[str] | None, extra: set[str] = frozenset()
@@ -1863,6 +1679,17 @@ class SnapshotSink:
         return out
 
     # ------------------------------------------------------------- merge
+    def _check_fold_mode(self, snap: dict | None) -> None:
+        """The fold mode is a per-table property: folding per-cell
+        deltas with row LWW (or vice versa) silently corrupts state,
+        so a mode-mismatched handle is refused outright."""
+        if snap is not None and bool(snap.get("patch", False)) != self.patch:
+            raise RuntimeError(
+                f"table at {self.root} was written with patch="
+                f"{snap.get('patch', False)}; this sink was constructed "
+                f"with patch={self.patch}"
+            )
+
     def apply_batch(self, batch_df: DataFrame, batch_id: str | int) -> dict:
         """Key-partitioned MERGE of one micro-batch of change events.
 
@@ -1874,15 +1701,7 @@ class SnapshotSink:
         t0 = time.time()
         batch_id = self._phys_batch_id(str(batch_id))
         snap = self.current_snapshot()
-        if snap is not None and bool(snap.get("patch", False)) != self.patch:
-            # the fold mode is a per-table property: folding per-cell
-            # deltas with row LWW (or vice versa) silently corrupts
-            # state, so a mode-mismatched reopen is refused outright
-            raise RuntimeError(
-                f"table at {self.root} was written with patch="
-                f"{snap.get('patch', False)}; this sink was constructed "
-                f"with patch={self.patch}"
-            )
+        self._check_fold_mode(snap)
         if self._is_committed_in(snap, batch_id):
             return {"batch_id": batch_id, "skipped": True, "reason": "already committed"}
         # register in-flight BEFORE planning: _manifested_buckets below
@@ -2202,7 +2021,7 @@ class SnapshotSink:
         new_entries: dict[str, dict] = {}
         bucket_rows: dict[int, int] = {}
         dest_root = os.path.join(self.root, "data", f"ingest={batch_id}")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             head = self.current_snapshot()
             if self._is_committed_in(head, batch_id):
                 shutil.rmtree(staging, ignore_errors=True)
@@ -2362,8 +2181,7 @@ class SnapshotSink:
                 }
             shutil.rmtree(staging, ignore_errors=True)
             for b in sorted(manifested):
-                with open(self._manifest_path(batch_id, b)) as fh:
-                    m = json.load(fh)
+                m = tm.read_json(self._manifest_path(batch_id, b))
                 bucket_rows[b] = m["rows"]
                 new_entries[str(b)] = {
                     "path": m.get(
@@ -2435,7 +2253,7 @@ class SnapshotSink:
         bootstrap_schema_ddl: str | None = None,
     ) -> None:
         """The commit merge (caller holds ``_commit_lock`` AND the
-        cross-process ``_table_lock``, and has already re-read ``head``
+        cross-process ``tm.table_lock``, and has already re-read ``head``
         and done the duplicate/rebucket rechecks): re-evolve the table
         schema against the head — concurrent batches may have committed
         since this batch planned — merge this batch's bucket entries (a
@@ -2798,7 +2616,7 @@ class SnapshotSink:
                      "file_ranges": file_ranges, "col_ranges": col_ranges}
                 ]
             shutil.rmtree(staging, ignore_errors=True)
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             head = self.current_snapshot()
             if head["version"] != snap["version"]:
                 # a cross-object batch committed mid-rebucket: its rows
@@ -2871,7 +2689,7 @@ class SnapshotSink:
             raise ValueError("max_rows must be non-negative")
         if max_n_tok <= 0:
             raise ValueError("max_n_tok must be positive")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet")
@@ -2910,7 +2728,7 @@ class SnapshotSink:
         """Remove the table-level write contract (one metadata-only
         commit)."""
         self._require_main("drop_table_audit")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet")
@@ -2980,7 +2798,7 @@ class SnapshotSink:
         self._require_main("trim_committed_batches")
         if retain_last < 0:
             raise ValueError(f"retain_last must be >= 0, got {retain_last}")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet")
@@ -3043,7 +2861,7 @@ class SnapshotSink:
         self._require_main("expire_snapshots")
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet")
@@ -3065,22 +2883,9 @@ class SnapshotSink:
 
             def _sweep(below: int, keep: set) -> int:
                 n = 0
-                sdir = os.path.join(self.root, "_snapshots")
-                for f in os.listdir(sdir):
-                    if not (f.startswith("v") and f.endswith(".json")):
-                        continue
-                    # parse the WHOLE version field, not 6 digits:
-                    # f"v{v:06d}" stops zero-padding at 10^6, exactly
-                    # the chain length this feature exists for — a
-                    # 6-digit slice would mis-parse v1000000.json as
-                    # 100000 and reap live above-floor JSONs
-                    # (review-found)
-                    try:
-                        v = int(f[1:-5])
-                    except ValueError:
-                        continue  # foreign file; never delete it
+                for v in tm.main_versions(self.root):
                     if v < below and v not in keep:
-                        os.remove(os.path.join(sdir, f))
+                        tm.drop_main_snapshot(self.root, v)
                         n += 1
                 return n
 
@@ -3328,7 +3133,7 @@ class SnapshotSink:
             label, extra = "rename_column", {"rename_map": {"old": old, "new": new}}
         if not any(ents for ents in snap["buckets"].values()):
             # no data files: the alter is a metadata-only schema commit
-            with self._commit_lock, self._table_lock():
+            with self._commit_lock, tm.table_lock(self.root):
                 head = self.current_snapshot()
                 if head["version"] != snap["version"]:
                     raise RuntimeError(
@@ -3517,6 +3322,7 @@ class SnapshotSink:
         snap = self.current_snapshot()
         if snap is None:
             return {"compacted": []}
+        self._check_fold_mode(snap)
         # claim the buckets in the shared _compacting guard: without it
         # a pipelined apply_batch's INLINE compaction of the same bucket
         # folds the same plan-time deltas concurrently — harmless for
@@ -3708,7 +3514,7 @@ class SnapshotSink:
             str(b): {e["path"] for e in snap["buckets"].get(str(b), [])}
             for b in todo
         }
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             head = self.current_snapshot()
             if head["n_buckets"] != self.n_buckets:
                 raise RuntimeError(
@@ -3829,7 +3635,7 @@ class SnapshotSink:
         atomic against concurrent commits; it cannot cover publishes
         that haven't reached their critical section."""
         self._require_main("vacuum")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, tm.table_lock(self.root):
             return self._vacuum_locked(older_than_s)
 
     def _vacuum_locked(self, older_than_s: float = 0.0) -> dict:

@@ -34,7 +34,6 @@ the row-level changelog instead:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -45,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from beehive_data_etl_spark.sinks.snapshot import KEY, SEQ, _INTERNAL
+from beehive_data_etl_spark.sources import table_meta as tm
 
 
 def _token_bucket_expr(n_buckets: int):
@@ -83,10 +83,8 @@ class TokenIndex:
         return os.path.join(self.root, "CURRENT")
 
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                cur = json.load(fh)
-        except FileNotFoundError:
+        cur = tm.read_json(self._ptr_path())
+        if cur is None:
             return None
         # layout guards (mirrors SnapshotSink's stored-n_buckets check):
         # opening an existing index with a different bucket count would
@@ -101,21 +99,18 @@ class TokenIndex:
         return cur
 
     def _swap(self, version: int, files: list[str]) -> None:
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "files": files,
-                    "n_buckets": self.n_buckets,
-                    # the element type postings were HASHED under —
-                    # pinned because xxhash64(int) != xxhash64(long):
-                    # a widened probe type would bucket differently
-                    "elem": self._sink_elem_type().simpleString(),
-                },
-                fh,
-            )
-        os.replace(tmp, self._ptr_path())  # THE commit point
+        tm.write_json(  # THE commit point
+            self._ptr_path(),
+            {
+                "version": version,
+                "files": files,
+                "n_buckets": self.n_buckets,
+                # the element type postings were HASHED under —
+                # pinned because xxhash64(int) != xxhash64(long):
+                # a widened probe type would bucket differently
+                "elem": self._sink_elem_type().simpleString(),
+            },
+        )
 
     # ------------------------------------------------------------ schema
     def _table_schema(self) -> T.StructType:

@@ -18,13 +18,14 @@ engine itself never generates data.
 
 from __future__ import annotations
 
-import json
 import os
 from datetime import datetime, timezone
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+from .table_meta import read_json, write_json
 
 VOCAB = 50257  # GPT-2-ish vocab size for synthetic token ids
 MAX_LEN = 512
@@ -159,10 +160,8 @@ def generate_event_log(
         "version": 6,
     }
     meta_path = os.path.join(out_dir, "_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            if json.load(fh) == meta:
-                return out_dir
+    if read_json(meta_path) == meta:
+        return out_dir
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
 
@@ -305,8 +304,7 @@ def generate_event_log(
     else:
         for f in range(n_files):
             _write_file(f)
-    with open(meta_path, "w") as fh:
-        json.dump(meta, fh)
+    write_json(meta_path, meta)
     return out_dir
 
 
@@ -359,10 +357,8 @@ def generate_patch_log(
         "version": 2,  # v2: source varies by (doc, seq)
     }
     meta_path = os.path.join(out_dir, "_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            if json.load(fh) == meta:
-                return out_dir
+    if read_json(meta_path) == meta:
+        return out_dir
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
 
@@ -469,8 +465,7 @@ def generate_patch_log(
             os.path.join(out_dir, f"part-{f:05d}.parquet"),
             row_group_size=20000,
         )
-    with open(meta_path, "w") as fh:
-        json.dump(meta, fh)
+    write_json(meta_path, meta)
     return out_dir
 
 
@@ -531,10 +526,8 @@ def generate_txn_log(
         "version": 2,
     }
     meta_path = os.path.join(out_dir, "_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            if json.load(fh) == meta:
-                return out_dir
+    if read_json(meta_path) == meta:
+        return out_dir
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
 
@@ -666,6 +659,5 @@ def generate_txn_log(
         pq.write_table(
             tbl, os.path.join(out_dir, f"part-{f:05d}.parquet"), row_group_size=20000
         )
-    with open(meta_path, "w") as fh:
-        json.dump(meta, fh)
+    write_json(meta_path, meta)
     return out_dir

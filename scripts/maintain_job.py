@@ -90,6 +90,7 @@ import time
 from pyspark.sql import SparkSession
 
 from beehive_data_etl_spark.sinks.snapshot import SnapshotSink
+from beehive_data_etl_spark.sources import table_meta as tm
 
 
 def main() -> None:
@@ -97,15 +98,12 @@ def main() -> None:
     spark = SparkSession.builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    current = os.path.join(root, "_snapshots", "CURRENT")
-    if not os.path.exists(current):
+    if tm.current_snapshot(root) is None:
         print("MAINTAIN_METRICS " + json.dumps({"skipped": "no snapshot"}))
         return
-    with open(current) as fh:
-        name = fh.read().strip()
-    with open(os.path.join(root, "_snapshots", name)) as fh:
-        n_buckets = json.load(fh)["n_buckets"]
-    sink = SnapshotSink(spark, root, n_buckets=n_buckets)
+    # open() reads the bucket count AND the fold mode from the head: a
+    # row-LWW handle compacting a per-cell table would fold it wrongly
+    sink = SnapshotSink.open(spark, root)
 
     known = {
         "compact",
@@ -250,10 +248,7 @@ def main() -> None:
         if os.path.isdir(os.path.join(vroot, "token_index")):
             from beehive_data_etl_spark.sinks.token_index import TokenIndex
 
-            with open(
-                os.path.join(vroot, "token_index", "CURRENT")
-            ) as fh:
-                stored = json.load(fh)
+            stored = tm.read_json(os.path.join(vroot, "token_index", "CURRENT"))
             res["token_index"] = TokenIndex(
                 spark, sink, os.path.join(vroot, "token_index"),
                 n_buckets=stored["n_buckets"],

@@ -63,6 +63,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from beehive_data_etl_spark.sinks.snapshot import SnapshotSink
+from beehive_data_etl_spark.sources import table_meta as tm
 from beehive_data_etl_spark.sources.spark_datasource import register
 
 
@@ -83,10 +84,7 @@ def _run_id(ckpt: str) -> str:
             return fh.read().strip()
     except FileNotFoundError:
         rid = uuid.uuid4().hex[:12]
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(rid)
-        os.replace(tmp, path)
+        tm.write_text(path, rid)
         return rid
 
 

@@ -215,3 +215,50 @@ def test_maintain_views_section(spark, tmp_path, monkeypatch, capsys):
     assert len(ann.current()["files"]) == 1
     assert ix.verify()["ok"]
     assert ann.verify()["ok"]
+
+
+def test_maintain_job_compacts_patch_table(
+    spark, patch_log, tmp_path, monkeypatch, capsys
+):
+    """A per-cell (patch=True) table is compacted with the per-cell
+    fold: the job opens the table in the mode its head records rather
+    than as a row-LWW table (whose max(struct) fold cannot even order
+    the _cell_seq map)."""
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+    import maintain_job
+
+    from beehive_data_etl_spark.verify import oracle_patch_final_spark
+
+    root = str(tmp_path / "t")
+    sink = SnapshotSink(spark, root, n_buckets=4, compact_threshold=100, patch=True)
+    replay_incremental(spark, patch_log, sink, files_per_batch=1)
+
+    monkeypatch.setattr(sys, "argv", ["maintain_job.py", root])
+    monkeypatch.setenv("MAINTAIN_SECTIONS", "compact")
+    maintain_job.main()
+    line = next(
+        ln for ln in capsys.readouterr().out.splitlines()
+        if ln.startswith("MAINTAIN_METRICS ")
+    )
+    assert json.loads(line.split(" ", 1)[1])["compact"]["compacted"]
+
+    snap = sink.current_snapshot()
+    assert all(len(ents) <= 1 for ents in snap["buckets"].values())
+    state = sink.read_state()
+    report = compare_final(
+        state.filter(~state.deleted), oracle_patch_final_spark(spark, patch_log)
+    )
+    assert report["ok"], report
+
+
+def test_rewrite_refuses_fold_mode_mismatch(spark, patch_log, tmp_path):
+    """A handle whose fold mode differs from the table's is refused by
+    compaction exactly as apply_batch refuses it."""
+    import pytest
+
+    root = str(tmp_path / "t")
+    sink = SnapshotSink(spark, root, n_buckets=2, compact_threshold=100, patch=True)
+    replay_incremental(spark, patch_log, sink, files_per_batch=4, max_batches=2)
+    row_handle = SnapshotSink(spark, root, n_buckets=2)
+    with pytest.raises(RuntimeError, match="written with patch=True"):
+        row_handle.compact()

@@ -72,6 +72,27 @@ def test_tag_semantics(spark, smoke_log, tmp_path):
         sink.read_state(version="nope")
 
 
+def test_numeric_refs_are_versions(spark, smoke_log, tmp_path):
+    """A numeric string resolves as a version on the sink exactly as in
+    the Data Source (whose options always arrive as strings), and no
+    tag can take a name that rule would shadow."""
+    sink = SnapshotSink(spark, str(tmp_path / "t"), n_buckets=4)
+    replay_incremental(spark, smoke_log, sink, files_per_batch=4, max_batches=2)
+    assert sink.resolve_ref("1") == 1
+    assert sink.snapshot("2")["version"] == 2
+    assert sink.read_state(version="1").count() == sink.read_state(
+        version=1
+    ).count()
+    for bad in ("3", "-1"):
+        with pytest.raises(ValueError, match="version number"):
+            sink.tag(bad, 1)
+        with pytest.raises(ValueError, match="version number"):
+            sink.move_tag(bad, 1)
+    assert sink.tags() == {}
+    # digits inside a name are fine
+    assert sink.tag("v3") == sink.current_snapshot()["version"]
+
+
 def test_vacuum_retains_tagged_files(spark, smoke_log, tmp_path):
     # copy-on-write so every batch supersedes the previous files —
     # without the tag, vacuum reaps the old version's data immediately
