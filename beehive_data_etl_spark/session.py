@@ -15,6 +15,19 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _driver_mem() -> str:
+    """``SPARK_DRIVER_MEM`` when set; else min(16g, a quarter of
+    physical RAM), floored at 2g. The heap is pinned and pre-touched,
+    so a fixed 16g default aborts the JVM on hosts under ~20 GB."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{max(2048, min(16384, ram_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "beehive-cdc-engine",
     cores: int | None = None,
@@ -29,6 +42,7 @@ def get_spark(
     """
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
+    mem = _driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -39,15 +53,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", mem)
         # pin the heap (-Xms == -Xmx): G1 on Java 17 uncommits idle heap
         # and the kernel page-zeroing on re-touch shows up as multi-second
         # system-time stalls inside otherwise-identical jobs
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "16g")
-            + " -XX:+AlwaysPreTouch",
-        )
+        .config("spark.driver.extraJavaOptions", f"-Xms{mem} -XX:+AlwaysPreTouch")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # token-array rows are ~1 KB; 32 MB input splits keep wide-array

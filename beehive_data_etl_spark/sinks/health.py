@@ -140,8 +140,8 @@ def table_report(sink, small_file_rows: int | None = None) -> dict:
                 "args": {"small_files": small_files},
             }
         )
-    # bucket skew: the unit of merge parallelism — one bucket far
-    # above the median makes straggler tasks at every fold
+    # bucket skew: each bucket is written by exactly one task — one
+    # bucket far above the median makes straggler tasks at every fold
     if median_bucket > 0 and max_bucket > 4 * median_bucket:
         recs.append(
             {

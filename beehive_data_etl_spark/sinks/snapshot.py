@@ -31,10 +31,13 @@ update can never resurrect a deleted doc (SURVEY.md §7.3). Tombstone GC
 is a compaction concern, out of scope at test scale.
 
 Scale notes (100 TB / 10^10 events): state is only ever read for
-touched buckets; bucket count is the unit of merge parallelism — size
-it so one bucket's state fits an executor's shuffle partition
-(e.g. 4096 buckets for a 10 TB table). All driver-side collections in
-this file are bounded by ``n_buckets``, never by data volume.
+touched buckets; bucket count sets the file layout and read pruning —
+size it so one bucket's state fits an executor's shuffle partition
+(e.g. 4096 buckets for a 10 TB table), since each bucket is written by
+exactly one task. Write parallelism is NOT the bucket count: it comes
+from the session's shuffle partitions, coalesced to the data by AQE
+(``_write_buckets``). All driver-side collections in this file are
+bounded by ``n_buckets``, never by data volume.
 """
 
 from __future__ import annotations
@@ -199,8 +202,9 @@ class SnapshotSink:
         # lets a point lookup() skip row groups the key isn't in.
         # Adaptive sizing (parquet-mr 1.13+): the writer keeps the
         # smallest candidate meeting the target FPP from the ACTUAL
-        # per-file NDV, so small deltas pay ~64 KB, not a fixed
-        # worst-case filter. Measured here: warm point probe on an
+        # per-file NDV, so small deltas pay a filter sized to their
+        # keys (see _file_options), not a fixed worst-case one.
+        # Measured here: warm point probe on an
         # 8-file unsorted table 0.37 s -> 0.23 s at 4M rows, ~5% file
         # size; the win grows with rows-per-file (row groups skipped
         # without decoding). Read side is free: Spark's vectorized
@@ -840,10 +844,50 @@ class SnapshotSink:
             self.target_file_rows or 0,
         )
         if self.bloom_filter:
-            writer = writer.option(
-                f"parquet.bloom.filter.enabled#{KEY}", "true"
-            ).option("parquet.bloom.filter.adaptive.enabled", "true")
+            # adaptive sizing keeps the smallest candidate that meets
+            # the FPP; parquet-mr's default 5 candidates below its 1 MB
+            # cap bottom out at 64 KB/file, so a 160-key delta paid
+            # 64 KB. 12 halvings reach 512 B. Only the column-scoped
+            # key is honoured (the unscoped one is ignored).
+            writer = (
+                writer.option(f"parquet.bloom.filter.enabled#{KEY}", "true")
+                .option("parquet.bloom.filter.adaptive.enabled", "true")
+                .option(f"parquet.bloom.filter.candidates.number#{KEY}", "12")
+            )
         return writer
+
+    def _write_buckets(self, df: DataFrame, staging: str, sort_cols=None) -> None:
+        """Write ``df`` (carrying ``_bucket``) as ``_bucket=N`` partition
+        dirs under ``staging`` — the one data write of ingest, rebucket
+        and the compaction/backfill rewrite.
+
+        The shuffle is ``repartition("_bucket")`` with NO count: its
+        width is the session's shuffle partitions, and AQE coalesces
+        it to the data's size (an explicit count would pin it). A
+        count of ``n_buckets`` would pay a task's fixed cost (Hadoop
+        conf deserialisation, file/.crc/dir creation) per bucket even
+        when a batch writes a few rows per bucket. Hashing on
+        ``_bucket`` lands every bucket in exactly ONE task, so each
+        bucket dir gets one file (or ``maxRecordsPerFile`` splits of
+        one sorted run).
+
+        ``sort_cols`` (after ``_bucket``) sorts within each task; a
+        Column entry (the z-order Morton key) is materialised once per
+        row after the shuffle and dropped after the sort, instead of
+        being re-evaluated on every comparison."""
+        out = df.repartition("_bucket")
+        if sort_cols is not None:
+            names, tmp = [], []
+            for i, c in enumerate(sort_cols):
+                if not isinstance(c, str):
+                    out = out.withColumn(f"_sort{i}", c)
+                    c = f"_sort{i}"
+                    tmp.append(c)
+                names.append(c)
+            out = out.sortWithinPartitions("_bucket", *names).drop(*tmp)
+        self._file_options(
+            out.write.mode("overwrite").partitionBy("_bucket")
+        ).parquet(staging)
 
     def _write_manifest(self, batch_id: str, bucket: int, body: dict) -> None:
         path = self._manifest_path(batch_id, bucket)
@@ -1915,11 +1959,7 @@ class SnapshotSink:
 
         staging = os.path.join(self.root, "data", f"_stage-{uuid.uuid4().hex}")
         t_plan = time.time()
-        self._file_options(
-            merged.repartition(self.n_buckets, "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-        ).parquet(staging)
+        self._write_buckets(merged, staging)
         t_job = time.time()
         self.crash_hook("after_data_write")
 
@@ -2527,9 +2567,11 @@ class SnapshotSink:
         """Online partition evolution: rewrite the table into a new
         bucket count and atomically switch the table's bucket space.
 
-        The scale story: bucket count is the unit of merge parallelism
-        and must track table growth — a table bootstrapped at 64 buckets
-        that grows 100× needs resharding or every bucket's state stops
+        The scale story: bucket count sets the file layout and read
+        pruning (write parallelism comes from the shuffle partitions,
+        through AQE) and must track table growth — each bucket is
+        written by one task, so a table bootstrapped at 64 buckets that
+        grows 100× needs resharding or every bucket's state stops
         fitting an executor partition. This is Iceberg's partition-spec
         evolution; since this sink's reads prune by bucket NUMBER, old
         and new spec cannot coexist file-by-file, so rebucket() is a
@@ -2591,12 +2633,7 @@ class SnapshotSink:
             if ff is not None:
                 folded = folded.filter(ff)  # GC stickiness at every fold
             folded = folded.withColumn("_bucket", _bucket_expr(new_n_buckets))
-            self._file_options(
-                folded.repartition(new_n_buckets, "_bucket")
-                .sortWithinPartitions("_bucket", KEY)
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-            ).parquet(staging)
+            self._write_buckets(folded, staging, sort_cols=[KEY])
             os.makedirs(dest_root, exist_ok=True)
             os.utime(dest_root)
             for d in sorted(os.listdir(staging)):
@@ -3445,20 +3482,11 @@ class SnapshotSink:
         # zorder_col the Morton key replaces the lexicographic
         # cluster sort (computed on the fly, dropped before write —
         # the projection after the sort preserves partition order)
-        to_write = folded.repartition(self.n_buckets, "_bucket")
         if zorder_col is not None:
-            to_write = (
-                to_write.withColumn("_zval", zorder_col)
-                .sortWithinPartitions("_bucket", "_zval", KEY)
-                .drop("_zval")
-            )
+            sort_cols = [zorder_col, KEY]
         else:
-            to_write = to_write.sortWithinPartitions(
-                "_bucket", *(cluster_by or []), KEY
-            )
-        self._file_options(
-            to_write.write.mode("overwrite").partitionBy("_bucket")
-        ).parquet(staging)
+            sort_cols = [*(cluster_by or []), KEY]
+        self._write_buckets(folded, staging, sort_cols=sort_cols)
         dest_root = os.path.join(self.root, "data", f"ingest={tag}")
         os.makedirs(dest_root, exist_ok=True)
         os.utime(dest_root)  # same vacuum-rmdir race guard as publish

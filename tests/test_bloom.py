@@ -5,11 +5,11 @@ every UNCOMPACTED delta file's range span the whole keyspace, and
 cluster_by compaction deliberately sorts by payload columns first.
 
 Pins: (1) the bloom is physically present in every data-write path's
-files (ingest delta, compact rewrite, rebucket) — byte-level evidence,
-a bloom-on file is strictly larger than the byte-identical bloom-off
-file; (2) lookup()/read_final() stay exact with blooms on, including
-negative probes (where a false skip would LOSE rows); (3) the knob
-actually disables it."""
+files (ingest delta, compact rewrite, rebucket) — read from each
+file's footer by parquet-mr itself — and absent with the knob off;
+(2) the adaptive filter is sized to the file's keys, not parquet-mr's
+64 KB floor; (3) lookup()/read_final() stay exact with blooms on,
+including negative probes (where a false skip would LOSE rows)."""
 
 import glob
 import os
@@ -30,36 +30,68 @@ def _events(spark, lo, hi, op="I", seq_base=1000):
     )
 
 
-def _data_bytes(root):
-    return {
-        f: os.path.getsize(f)
-        for f in glob.glob(os.path.join(root, "data", "**", "*.parquet"),
-                           recursive=True)
-    }
+def _data_files(root):
+    return set(
+        glob.glob(os.path.join(root, "data", "**", "*.parquet"), recursive=True)
+    )
+
+
+def _key_bloom_offsets(spark, path):
+    """The KEY column chunk's bloom-filter offset in every row group of
+    ``path``, as parquet-mr reads the footer (-1 = no filter)."""
+    jvm = spark._jvm
+    inp = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        jvm.org.apache.hadoop.fs.Path(path), spark._jsc.hadoopConfiguration()
+    )
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(inp)
+    try:
+        return [
+            c.getBloomFilterOffset()
+            for block in reader.getFooter().getBlocks()
+            for c in block.getColumns()
+            if c.getPath().toDotString() == KEY
+        ]
+    finally:
+        reader.close()
 
 
 def test_bloom_written_on_every_data_path(spark, tmp_path):
     """Same batches through two sinks differing only in bloom_filter:
-    every write path's files carry extra footer bytes (the bloom)."""
-    sizes = {}
+    every write path's bloom-on files carry a KEY bloom in every row
+    group, bloom-off files none, and the adaptive filter costs at most
+    2 KB per file at this size (parquet-mr's default candidates floor
+    at 64 KB)."""
+    written = {}
     for name, bloom in (("on", True), ("off", False)):
         root = str(tmp_path / name)
         s = SnapshotSink(
             spark, root, n_buckets=2, bloom_filter=bloom, compact_threshold=100
         )
+        steps, seen = [], set()
+
+        def step(label):
+            new = _data_files(root) - seen
+            seen.update(new)
+            steps.append((label, sorted(new)))
+
         s.apply_batch(_events(spark, 0, 400), "b1")
         s.apply_batch(_events(spark, 400, 800, seq_base=5000), "b2")
-        delta = sum(_data_bytes(root).values())
+        step("ingest delta")
         s.compact()  # 2 deltas/bucket -> real rewrite
-        compacted = sum(_data_bytes(root).values())
+        step("compact")
         s.rebucket(4)
-        rebucketed = sum(_data_bytes(root).values())
-        sizes[name] = (delta, compacted, rebucketed)
-    for i, path in enumerate(("ingest delta", "compact", "rebucket")):
-        on, off = sizes["on"][i], sizes["off"][i]
-        # adaptive blooms cost >=~10 KB/file even at this scale; the
-        # data bytes themselves are identical (same rows, same codec)
-        assert on > off + 10_000, f"{path}: bloom-on {on} !> bloom-off {off}"
+        step("rebucket")
+        written[name] = steps
+    for (path, on), (_, off) in zip(written["on"], written["off"]):
+        assert on and len(on) == len(off), (path, on, off)
+        for f in on:
+            offsets = _key_bloom_offsets(spark, f)
+            assert offsets and all(o >= 0 for o in offsets), (path, f, offsets)
+        for f in off:
+            assert all(o < 0 for o in _key_bloom_offsets(spark, f)), (path, f)
+        on_bytes = sum(map(os.path.getsize, on))
+        off_bytes = sum(map(os.path.getsize, off))
+        assert on_bytes <= off_bytes + 2048 * len(on), (path, on_bytes, off_bytes)
 
 
 def test_lookup_exact_with_blooms_across_layouts(spark, tmp_path):

@@ -79,23 +79,34 @@ def test_builtin_queries_have_no_python_eval(spark):
 
 
 def test_cdc_merge_shuffle_count(spark, smoke_log, tmp_path):
-    """The append-path merge dataflow must contain exactly ONE
-    data-bearing shuffle (the LWW aggregation) plus the bucket
-    repartition — no more. Regression guard for the single-job merge."""
-    from beehive_data_etl_spark.operators.lww import lww_dedup
-    from beehive_data_etl_spark.sinks.snapshot import _bucket_expr
+    """The sink's append-path write (apply_batch through the sink's
+    one bucket-write helper) must contain exactly ONE data-bearing
+    shuffle (the LWW aggregation) plus the bucket repartition — no
+    more. Regression guard for the single-job merge. The bucket
+    exchange has no fixed count (REPARTITION_BY_COL), so AQE sizes the
+    write to the data instead of one task per bucket."""
+    from beehive_data_etl_spark.sinks.snapshot import SnapshotSink
+    from beehive_data_etl_spark.sources.readers import read_wal
 
-    df = spark.read.parquet(smoke_log).drop("event_ts", "batch_hint")
-    state = df.withColumn("deleted", F.col("op") == F.lit("D")).drop("op")
-    merged = lww_dedup(state, "doc_id", "op_sequence").withColumn(
-        "_bucket", _bucket_expr(8)
-    ).repartition(8, "_bucket")
+    sink = SnapshotSink(spark, str(tmp_path / "t"), n_buckets=16)
+    written = []
+    file_options = sink._file_options
+
+    def spy(writer):  # every data write passes its writer through here
+        written.append(writer._df)
+        return file_options(writer)
+
+    sink._file_options = spy
+    sink.apply_batch(read_wal(spark, smoke_log), "b0")
+    [merged] = written
     plan = plan_of(merged)
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n_exchanges <= 2, f"merge plan grew extra shuffles:\n{plan}"
     # and the partial (map-side) LWW reduction runs BEFORE the shuffle —
     # the property that makes Zipf-hot keys harmless
     assert re.search(r"partial_max\(struct\(op_sequence", plan), plan
+    assert re.search(r"hashpartitioning\(_bucket#\d+, \d+\), REPARTITION_BY_COL", plan), plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
 
 
 def test_salted_dedup_two_phase_shape(spark, smoke_log):
